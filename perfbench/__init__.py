@@ -1,0 +1,5 @@
+"""Whole-job benchmark for the convert, resume, rename and curate jobs.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>``; see ``perfbench/README.md``.
+"""
