@@ -4,7 +4,7 @@ Spark plan shape (SURVEY.md §3 re-expression):
 
     scan (column-pruned: doc_id, source_file, spans)
       -> [optional] size-balanced repartition        (plans/salting.py)
-      -> ArrowEvalPython: convert kernel             (this module)
+      -> MapInPandas: convert kernel                 (this module)
       -> downstream writes / aggregations
 
 Exactly ONE Python stage. The kernel body is
@@ -87,95 +87,20 @@ def _convert_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out_rows, columns=cols)
 
 
-def _arrow_schema(with_hash: bool):
-    import pyarrow as pa
-
-    span_type = pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
-    fields = [
-        ("doc_id", pa.string()),
-        ("source_file", pa.string()),
-        ("spans", span_type),
-        ("document_type", pa.string()),
-        ("confidence", pa.float64()),
-        ("lines_removed", pa.int32()),
-        ("headings_added", pa.int32()),
-        ("character_count", pa.int32()),
-        ("success", pa.bool_()),
-        ("error_message", pa.string()),
-    ]
-    if with_hash:
-        fields.append(("input_hash", pa.string()))
-    return pa.schema(fields)
-
-
-def _convert_arrow_batches(batches):
-    """Arrow-native kernel wrapper (mapInArrow).
-
-    Skips the pandas block-manager round trip: ``to_pylist`` on the
-    list<struct> column hands the kernel plain span dicts, and the output
-    columns are built as Arrow arrays directly. MEASURED SLOWER than the
-    mapInPandas path on the 1M-doc corpus at local[32] (25-32 s vs 16.4 s):
-    ``pa.array`` re-inferring nested list<struct> values from Python dicts
-    per 256-row batch dominates, where Spark's pandas serializer amortizes
-    the same conversion in C. Kept as an A/B-tested alternative path
-    (``use_arrow=True``) and as the template for a future flat-offsets
-    builder; the default stays pandas.
-    """
-    import pyarrow as pa
-
-    out_schema = None
-    for rb in batches:
-        names = rb.schema.names
-        has_source = "source_file" in names
-        has_hash = "input_hash" in names
-        if out_schema is None:
-            out_schema = _arrow_schema(has_hash)
-        doc_ids = rb.column(names.index("doc_id")).to_pylist()
-        spans_in = rb.column(names.index("spans")).to_pylist()
-        sources = (
-            rb.column(names.index("source_file")).to_pylist() if has_source else doc_ids
-        )
-        hashes = rb.column(names.index("input_hash")).to_pylist() if has_hash else None
-        cols: dict[str, list] = {f.name: [] for f in CONVERT_OUTPUT_SCHEMA.fields}
-        if has_hash:
-            cols["input_hash"] = hashes
-        for i, (doc_id, spans) in enumerate(zip(doc_ids, spans_in)):
-            src = str(sources[i]) if has_source else None
-            res = convert_spans_doc(str(doc_id), spans or [], source_file=src)
-            res["source_file"] = src if has_source else f"{doc_id}.pdf"
-            for f in CONVERT_OUTPUT_SCHEMA.fields:
-                cols[f.name].append(res[f.name])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in out_schema],
-            schema=out_schema,
-        )
-
-
 def convert_documents(
     df: DataFrame,
     balance_partitions: Optional[int] = None,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Convert a span-shaped documents DataFrame.
 
     Input columns: ``doc_id`` (string), ``spans`` (array<struct>), and
     optionally ``source_file``. Set ``balance_partitions`` to apply the
     size-aware placement from plans/salting before the kernel stage (worth it
-    when the corpus has a heavy size tail; costs one shuffle).
-    ``use_arrow=True`` runs the kernel under ``mapInArrow`` (same kernel
-    body, no pandas detour) — measured slower, see _convert_arrow_batches;
-    the default ``mapInPandas`` wrapper wins. Both are single
-    ArrowEvalPython-family stages — the vectorization constraint holds
-    either way.
+    when the corpus has a heavy size tail; costs one shuffle). The kernel
+    runs as one ``mapInPandas`` stage: an Arrow-native wrapper that skips
+    pandas measured slower (25-32 s vs 16.4 s on the 1M-doc corpus at
+    local[32]; ``pa.array`` re-inferring nested list<struct> values from
+    Python dicts per batch dominated).
     """
     cols = ["doc_id", "spans"] + [
         c for c in ("source_file", "input_hash") if c in df.columns
@@ -190,6 +115,4 @@ def convert_documents(
         schema = T.StructType(
             schema.fields + [T.StructField("input_hash", T.StringType())]
         )
-    if use_arrow:
-        return pruned.mapInArrow(_convert_arrow_batches, schema=schema)
     return pruned.mapInPandas(_convert_batches, schema=schema)

@@ -21,8 +21,9 @@ functions/hashing.py):
 
 ``near_dedup`` composes them: codegen bands for everyone -> candidate
 pairs -> exact shingle sets recomputed for candidate docs only -> verified
-pairs -> canonical = min(doc_id) of the connected component (min-label
-propagation to fixpoint over the verified-pair node set).
+pairs -> canonical = min(doc_id) of the connected component
+(large-star/small-star to a fixpoint over the verified-pair edge list,
+O(log n) rounds whatever the chain length).
 """
 
 from __future__ import annotations
@@ -399,28 +400,50 @@ def simhash_pairs(
     )
 
 
-def _cc(algorithm: str):
-    """Connected-components implementation by name — ``"label"`` (min-label
-    propagation, O(diameter) rounds, the default) or ``"star"``
-    (large-star/small-star, O(log n) rounds for adversarial chains). Both
-    return identical (node, canonical) labelings
-    (tests/test_cc_star.py pins equality on randomized graphs)."""
-    if algorithm == "label":
-        return connected_canonical
-    if algorithm == "star":
-        return connected_canonical_star
-    raise ValueError(f"unknown cc_algorithm {algorithm!r} (label|star)")
+def connected_canonical(
+    verified: DataFrame,
+    max_iter: int = 40,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """(node, canonical) for every node appearing in verified pairs, where
+    canonical = min doc_id of the node's CONNECTED COMPONENT (transitive:
+    A~B, B~C => one component even when A~C was never verified).
 
+    Alternating large-star / small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): **O(log n) rounds
+    regardless of component diameter**, so a 10,000-link duplicate chain
+    (pathological but possible at 100 TB — think boilerplate-mutated
+    mirror farms) converges in ~a dozen rounds where min-label
+    propagation would need 5,000 materializations.
 
-def _lineage_tools(verified: DataFrame, checkpoint_dir: str | None):
-    """(ckpt, blocks, release) helpers shared by the iterative CC variants.
+    Each round is two groupBy-min + join passes over the edge list only
+    (never the corpus); edges monotonically point larger→smaller node and
+    the edge count never grows beyond the bidirected input, so per-round
+    shuffle volume is bounded by the verified-pair set. Lineage is
+    truncated per round. With ``checkpoint_dir`` set the truncation uses
+    RELIABLE ``checkpoint()`` into that directory (HDFS/object store on a
+    cluster) so an executor loss mid-iteration recovers from stable
+    storage; the default ``localCheckpoint`` keeps blocks on executors —
+    fine for the tiny node set in local mode, not survivable on a real
+    cluster (VERDICT r2 #6). Each round's checkpoint supersedes the
+    previous one, whose blocks are released immediately. A non-converged
+    exit raises instead of returning partial labels (the DuckDB oracle
+    computes a full closure, so partial labels would be wrong, not just
+    approximate).
 
-    ``ckpt`` truncates lineage per round — RELIABLE ``checkpoint()`` into
-    ``checkpoint_dir`` when given (survives executor loss on a cluster),
-    else ``localCheckpoint`` (fine in local mode). ``blocks``/``release``
-    bound executor storage across rounds: each round's checkpoint
-    supersedes the previous one, whose blocks are freed immediately.
+    large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u}).
+    small-star(u): over larger→smaller edges, connect u and all its
+    neighbors except the minimum to that minimum. Fixpoint = forest of
+    stars, every node directly attached to its component min.
     """
+    if checkpoint_dir is not None:
+        verified.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+
+    def _ckpt(df: DataFrame) -> DataFrame:
+        # eager: the round's fixpoint test must read materialized rows
+        if checkpoint_dir is not None:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
 
     def _blocks(df: DataFrame):
         # handle on the checkpointed internal RDD (the analyzed plan is a
@@ -438,148 +461,6 @@ def _lineage_tools(verified: DataFrame, checkpoint_dir: str | None):
                 handle.unpersist(False)
             except Exception:
                 pass
-
-    if checkpoint_dir is not None:
-        verified.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.checkpoint(eager=eager)
-
-    else:
-
-        def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-
-    return _ckpt, _blocks, _release
-
-
-def connected_canonical(
-    verified: DataFrame,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(node, canonical) for every node appearing in verified pairs, where
-    canonical = min doc_id of the node's CONNECTED COMPONENT (transitive:
-    A~B, B~C => one component even when A~C was never verified).
-
-    Iterative min-label propagation to a fixpoint, run only over the
-    verified-pair node set (tiny vs the corpus — pairs above a high Jaccard
-    threshold). Each round shuffles just the edge list; lineage is truncated
-    per round. With ``checkpoint_dir`` set the truncation uses RELIABLE
-    ``checkpoint()`` into that directory (HDFS/object store on a cluster) so
-    an executor loss mid-iteration recovers from stable storage; the default
-    ``localCheckpoint`` keeps blocks on executors — fine for the tiny node
-    set in local mode, not survivable on a real cluster (VERDICT r2 #6).
-
-    Convergence is O(component diameter) rounds — near-dup chains are short
-    in practice; for adversarial long chains at 100 TB switch to
-    large-star/small-star (O(log n) rounds), which this loop structure
-    accommodates. A non-converged exit raises instead of silently returning
-    partial labels (the DuckDB oracle computes a full closure, so partial
-    labels would be wrong, not just approximate).
-
-    Storage is bounded across iterations: each round's checkpoint supersedes
-    the previous round's, whose blocks are released immediately (the eager
-    checkpoint of round i+1 no longer reads them), and the edge-list
-    checkpoint is released once the loop exits. Only the FINAL label
-    checkpoint outlives the call — the caller's join still reads it lazily —
-    so peak executor storage is ~2 label snapshots + the edge list, not
-    max_iter snapshots.
-    """
-
-    _ckpt, _blocks, _release = _lineage_tools(verified, checkpoint_dir)
-
-    edges = verified.select("a", "b")
-    edges = _ckpt(
-        edges.unionByName(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ),
-        eager=False,
-    )
-    edges_blocks = _blocks(edges)
-    labels = _ckpt(
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-    )
-    labels_blocks = _blocks(labels)
-    def _step(lbls: DataFrame) -> DataFrame:
-        nbr_min = (
-            edges.join(lbls, edges["b"] == lbls["node"])
-            .groupBy(edges["a"].alias("node"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        return lbls.join(nbr_min, on="node", how="left").select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-        )
-
-    changed = None
-    for _ in range(max_iter):
-        # TWO propagation hops per materialization: the dominant
-        # per-round cost on the tiny node set is the fixed
-        # checkpoint + convergence-count job overhead, not the joins
-        # (measured: ~2 s/round at sf0.1), so doubling hops halves the
-        # rounds for the same diameter coverage. Convergence remains
-        # sound — the loop exits only when a full double-hop changes no
-        # label, which implies the single-hop fixpoint; an extra
-        # half-step at the fixpoint is idempotent.
-        new_labels = _ckpt(_step(_step(labels)))
-        new_blocks = _blocks(new_labels)
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("lbl", "old_lbl"), on="node"
-            )
-            .filter(F.col("lbl") != F.col("old_lbl"))
-            .limit(1)
-            .count()
-        )
-        # new_labels is materialized (eager ckpt) and `changed` has read the
-        # old snapshot — its blocks are dead weight from here on
-        _release(labels_blocks)
-        labels, labels_blocks = new_labels, new_blocks
-        if changed == 0:
-            break
-    _release(edges_blocks)
-    if changed is not None and changed != 0:
-        raise RuntimeError(
-            "connected_canonical did not converge within max_iter=%d rounds; "
-            "a duplicate chain longer than twice that diameter exists — raise "
-            "max_iter or switch to large-star/small-star" % max_iter
-        )
-    return labels.select("node", F.col("lbl").alias("canonical"))
-
-
-def connected_canonical_star(
-    verified: DataFrame,
-    max_iter: int = 40,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(node, canonical) via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — same contract as :func:`connected_canonical` (canonical =
-    component min), different convergence law: **O(log n) rounds regardless
-    of component diameter**, vs min-label propagation's O(diameter).
-
-    This is the adversarial-chain path the label-propagation docstring
-    promises: a 10,000-link duplicate chain (pathological but possible at
-    100 TB — think boilerplate-mutated mirror farms) converges in ~a dozen
-    rounds here where propagation would need 5,000 materializations.
-
-    Each round is two groupBy-min + join passes over the edge list only
-    (never the corpus); edges monotonically point larger→smaller node and
-    the edge count never grows beyond the bidirected input, so per-round
-    shuffle volume is bounded by the verified-pair set. Lineage is
-    truncated per round with the same reliable-vs-local checkpoint choice
-    as the propagation variant. Non-convergence raises rather than
-    returning partial labels.
-
-    large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u}).
-    small-star(u): over larger→smaller edges, connect u and all its
-    neighbors except the minimum to that minimum. Fixpoint = forest of
-    stars, every node directly attached to its component min.
-    """
-    _ckpt, _blocks, _release = _lineage_tools(verified, checkpoint_dir)
 
     # canonical larger→smaller direction, self-pairs dropped
     edges = _ckpt(
@@ -634,7 +515,7 @@ def connected_canonical_star(
             break
     if not converged:
         raise RuntimeError(
-            "connected_canonical_star did not converge within max_iter=%d "
+            "connected_canonical did not converge within max_iter=%d "
             "rounds (expected O(log n)); the edge set is still changing"
             % max_iter
         )
@@ -743,16 +624,17 @@ def near_dedup(
     max_bucket_size: int | None = None,
     shingle_width: int = 3,
     candidate_tier: str = "bands",
-    cc_algorithm: str = "label",
 ) -> DataFrame:
     """End-to-end near-dup marking: docs keep ``canonical_doc_id`` =
     min(doc_id) of their connected component in the verified near-duplicate
     graph (transitive chains collapse to ONE canonical id).
 
-    The component computation runs only over docs that have at least one
-    verified neighbor; everyone else is their own canonical via coalesce —
-    so the corpus-wide cost is one equi-join against the (small) label
-    table, broadcastable by AQE at scale.
+    The component computation (``connected_canonical``, large-star/
+    small-star: O(log n) rounds, so long duplicate chains converge as fast
+    as short ones) runs only over docs that have at least one verified
+    neighbor; everyone else is their own canonical via coalesce — so the
+    corpus-wide cost is one equi-join against the (small) label table,
+    broadcastable by AQE at scale.
 
     ``candidate_tier`` picks how band values are produced (identical values
     either way — pinned by test_minhash_bands_equals_signatures):
@@ -791,7 +673,7 @@ def near_dedup(
         # connected_canonical checkpoints eagerly and iterates to a
         # fixpoint with driver-side counts, so by the time it returns
         # every job reading `pairs` has run and its lineage is truncated
-        labels = _cc(cc_algorithm)(verified).withColumnRenamed("node", id_col)
+        labels = connected_canonical(verified).withColumnRenamed("node", id_col)
     finally:
         if pairs is not None:
             pairs.unpersist()
@@ -1699,7 +1581,6 @@ def near_dedup_incremental(
     id_col: str = "doc_id",
     threshold_micros: int = 500_000,
     max_bucket_size: int | None = None,
-    cc_algorithm: str = "label",
     base_bands: DataFrame | None = None,
     prune: str = "broadcast",
     base_bands_long: DataFrame | None = None,
@@ -1796,7 +1677,7 @@ def near_dedup_incremental(
             )
         )
         verified = jaccard_verify(sigs, pairs, id_col, threshold_micros)
-        labels = _cc(cc_algorithm)(verified).withColumnRenamed(
+        labels = connected_canonical(verified).withColumnRenamed(
             "node", id_col
         )
     finally:

@@ -108,8 +108,9 @@ def resume_pending(input_df: DataFrame, output_path: str) -> DataFrame:
     ``input_df`` must already carry ``input_hash`` (see with_input_hash).
 
     If the output was stamped with ``input_hash_ver`` (see
-    with_input_hash), rows hashed under a DIFFERENT framing version make
-    this raise instead of classifying the whole corpus as modified and
+    with_input_hash), rows hashed under a DIFFERENT framing version — or
+    rows whose stamp is null, i.e. of unknown version — make this raise
+    instead of classifying the whole corpus as modified and
     appending a duplicate of every row — the loud form of the migration
     hazard in the module docstring. One bounded aggregate (distinct over
     a <= handful-of-versions column) pays for the guard.
@@ -131,17 +132,21 @@ def resume_pending(input_df: DataFrame, output_path: str) -> DataFrame:
             return input_df  # no output yet -> everything pending
         raise
     if "input_hash_ver" in out.columns:
+        # a null stamp (rows written before the column existed, surfaced by
+        # a schema-merged read) is an UNKNOWN framing version, not a match
         stale = [
             r[0]
             for r in out.select("input_hash_ver").distinct().collect()
-            if r[0] is not None and r[0] != INPUT_HASH_VERSION
+            if r[0] != INPUT_HASH_VERSION
         ]
         if stale:
+            shown = sorted(stale, key=lambda v: (v is not None, v))
             raise ValueError(
                 f"output at {output_path!r} carries input_hash framing "
-                f"version(s) {sorted(stale)} but this build computes "
-                f"version {INPUT_HASH_VERSION}: resuming would re-append "
-                "every row. Rebuild the output once from scratch (see "
+                f"version(s) {shown} (None = unstamped rows of unknown "
+                f"version) but this build computes version "
+                f"{INPUT_HASH_VERSION}: resuming would re-append every "
+                "row. Rebuild the output once from scratch (see "
                 "operators/manifest.py migration note)."
             )
     return input_df.join(done, on=["doc_id", "input_hash"], how="left_anti")

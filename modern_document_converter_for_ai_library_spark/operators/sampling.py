@@ -671,8 +671,11 @@ def shuffled_shard_assign(
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
     bucket_width = -(-SHUFFLE_KEY_SPACE // n_buckets)
+    # null text counts as 0 tokens: a null count would null the running
+    # sum and with it the shard_id of every later doc in its bucket
     base = df.withColumn(
-        "n_tokens", F.size(_tokens(text_col)).cast("bigint")
+        "n_tokens",
+        F.coalesce(F.size(_tokens(text_col)), F.lit(0)).cast("bigint"),
     ).withColumn("_hm", shuffle_key_col(id_col, salt)).withColumn(
         "_bucket", F.expr(f"_hm div CAST({bucket_width} AS BIGINT)")
     )

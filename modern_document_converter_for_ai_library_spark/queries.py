@@ -1432,7 +1432,7 @@ def spark_shuffled_shard_manifest(
 _SHUF_SHARD_BASE_SQL = r"""
 WITH st AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens,
+         CAST(COALESCE(len(list_filter(string_split(text, ' '), x -> x <> '')), 0) AS BIGINT) AS n_tokens,
          ('0x' || substring(md5(CAST(CAST(doc_id AS BIGINT) AS VARCHAR) || '__SALT__'), 1, 15))::BIGINT AS hk
   FROM documents
 ), sc AS (
@@ -3150,32 +3150,6 @@ def spark_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def spark_near_dedup_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Identical contract to q_near_dedup but the connected-component
-    labeling runs large-star/small-star (O(log n) rounds,
-    operators/dedup.py:connected_canonical_star) instead of min-label
-    propagation — same oracle SQL, different physical algorithm, so the
-    parity gate pins the two implementations against each other AND
-    against DuckDB's recursive closure."""
-    from .operators.dedup import near_dedup
-
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-    )
-    out = near_dedup(
-        docs,
-        threshold_micros=500_000,
-        n_bands=1,
-        band_rows=2,
-        cc_algorithm="star",
-    )
-    return out.select(
-        "doc_id",
-        F.col("canonical_doc_id").cast("bigint").alias("canonical_doc_id"),
-        "is_near_duplicate",
-    )
-
-
 _NEAR_DEDUP_SQL = """
 WITH RECURSIVE t AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -3414,14 +3388,13 @@ def near_dedup_family_fronts(
     sink: list | None = None,
 ) -> list[tuple[DataFrame, DataFrame]]:
     """The deterministic LSH -> verify front ends shared by the
-    q_near_dedup family (q_near_dedup / q_near_dedup_star /
-    q_near_dedup_best share the first; q_near_dedup_chain owns the
-    second). Built with the exact same library calls the queries use, so
-    persisting the returned ``verified`` frames lets Spark's CacheManager
-    substitute the canonical-equal fragment inside every family query's
-    plan — the bench warm-sharing protocol from VERDICT r3 item 5
+    q_near_dedup family (q_near_dedup / q_near_dedup_best share the
+    first; q_near_dedup_chain owns the second). Built with the exact same
+    library calls the queries use, so persisting the returned ``verified``
+    frames lets Spark's CacheManager substitute the canonical-equal
+    fragment inside every family query's plan — the bench warm-sharing protocol from VERDICT r3 item 5
     (semantics unchanged: it is the same deterministic frame, computed
-    once instead of four times). Returns [(verified, pairs), ...]; the
+    once instead of once per query). Returns [(verified, pairs), ...]; the
     caller owns both lifetimes. Pass a caller-owned list as ``sink`` and
     each tuple is ALSO appended there as soon as it is constructed —
     near_dup_verified_pairs registers its ``pairs`` frame with the
@@ -7392,7 +7365,6 @@ SPARK_QUERIES = {
     "q_code_discovery": spark_code_discovery,
     "q_rename_pipeline": spark_rename_pipeline,
     "q_near_dedup": spark_near_dedup,
-    "q_near_dedup_star": spark_near_dedup_star,
     "q_near_dedup_best": spark_near_dedup_best,
     "q_near_dedup_wide": spark_near_dedup_wide,
     "q_near_dedup_chain": spark_near_dedup_chain,
@@ -7511,7 +7483,6 @@ ORACLE_SQL = {
     "q_frontmatter": _FRONTMATTER_SQL,
     "q_code_discovery": _CODE_DISCOVERY_SQL,
     "q_near_dedup": _NEAR_DEDUP_SQL,
-    "q_near_dedup_star": _NEAR_DEDUP_SQL,
     "q_near_dedup_best": _NEAR_DEDUP_BEST_SQL,
     "q_near_dedup_wide": _NEAR_DEDUP_WIDE_SQL,
     "q_near_dedup_chain": _NEAR_DEDUP_CHAIN_SQL,

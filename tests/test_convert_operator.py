@@ -107,27 +107,8 @@ def test_balanced_convert_identical(spark, corpus, golden):
 
 def test_plan_has_single_python_stage(spark, corpus):
     """Vectorization constraint: exactly one Arrow-batched Python node
-    (MapInArrow by default, MapInPandas on the fallback path) and no
-    row-at-a-time PythonUDF in the physical plan."""
+    (MapInPandas) and no row-at-a-time PythonUDF in the physical plan."""
     df = spark.createDataFrame(corpus.head(10), schema=DOCS_SCHEMA)
     plan = convert_documents(df)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan  # row-oriented Python UDF node
-    arrow_plan = (
-        convert_documents(df, use_arrow=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInArrow" in arrow_plan
-    assert "BatchEvalPython" not in arrow_plan
-
-
-def test_arrow_and_pandas_paths_agree(spark, corpus):
-    df = spark.createDataFrame(corpus.head(40), schema=DOCS_SCHEMA)
-    a = {
-        r["doc_id"]: _span_seq(r["spans"])
-        for r in convert_documents(df, use_arrow=True).collect()
-    }
-    p = {r["doc_id"]: _span_seq(r["spans"]) for r in convert_documents(df).collect()}
-    assert a == p

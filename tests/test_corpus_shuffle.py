@@ -227,6 +227,41 @@ def test_shuffled_shards_partitioning_invariance(spark, token_docs):
     assert a == b
 
 
+def test_shuffled_shards_null_text_counts_zero_tokens(spark, tmp_path):
+    """A null text is 0 tokens, never a null n_tokens/cum_tokens/shard_id,
+    and the DuckDB oracle SQL agrees row for row."""
+    import duckdb
+
+    from modern_document_converter_for_ai_library_spark.operators.sampling import (
+        shuffled_shard_assign,
+    )
+    from modern_document_converter_for_ai_library_spark.queries import (
+        _SHUF_SHARD_TOKENS,
+        _SHUF_SHARDS_SQL,
+        _SHUFFLE_SALT,
+    )
+
+    rows = [(i, None if i % 5 == 0 else f"a{i} b{i} c{i}") for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    cols = ["doc_id", "n_tokens", "shuffle_rank", "cum_tokens", "shard_id"]
+    got = {
+        tuple(r)
+        for r in shuffled_shard_assign(
+            df, _SHUF_SHARD_TOKENS, salt=_SHUFFLE_SALT
+        ).select(*cols).collect()
+    }
+    assert all(v is not None for r in got for v in r)
+    twin = _twin_shuffled_shards(
+        [(i, t or "") for i, t in rows], _SHUF_SHARD_TOKENS, _SHUFFLE_SALT
+    )
+    assert got == {(i, *v) for i, v in twin.items()}
+    path = str(tmp_path / "docs.parquet")
+    df.write.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    assert set(con.execute(_SHUF_SHARDS_SQL).fetchall()) == got
+
+
 def test_shuffled_shards_invalid_args(spark, token_docs):
     from modern_document_converter_for_ai_library_spark.operators.sampling import (
         shuffled_shard_assign,

@@ -141,3 +141,28 @@ def test_hash_version_stamp_and_guard(spark, corpus, tmp_path):
     stamped.withColumn("input_hash_ver", F.lit(1)).write.parquet(out_stale)
     with pytest.raises(ValueError, match="framing"):
         resume_pending(with_input_hash(corpus), out_stale)
+
+
+def test_null_hash_version_in_merged_output_raises(spark, corpus, tmp_path):
+    """Rows appended before the version stamp existed read back with a null
+    ``input_hash_ver`` under a schema-merged read: their framing version is
+    unknown, so resume refuses instead of skipping them."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "mixed_run")
+    ids = sorted(r["doc_id"] for r in corpus.select("doc_id").collect())
+    old = F.col("doc_id").isin(ids[: len(ids) // 2])
+    with_input_hash(corpus).filter(old).write.parquet(out)
+    with_input_hash(corpus, stamp_version=True).filter(~old).write.mode(
+        "append"
+    ).parquet(out)
+
+    prev = spark.conf.get("spark.sql.parquet.mergeSchema")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        merged = spark.read.parquet(out)
+        assert merged.filter("input_hash_ver IS NULL").count() == len(ids) // 2
+        with pytest.raises(ValueError, match="unknown version"):
+            resume_pending(with_input_hash(corpus), out)
+    finally:
+        spark.conf.set("spark.sql.parquet.mergeSchema", prev)
